@@ -22,6 +22,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.TopKPairsStrategy)
     ext.injectFunction((
       FunctionIdentifier("float_vec_dot"),
       info("float_vec_dot", "_FUNC_(a, b) - dot product of two float vectors"),

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
@@ -211,17 +211,7 @@ object TopK {
   def topKPerKey(df: DataFrame, keyCols: Seq[Column], orderCols: Seq[Column],
       k: Int): DataFrame = {
     val spark = df.sparkSession
-    // self-register ONLY on sessions built without GraftExtensions:
-    // planner.strategies is the planner's effective list (built-ins +
-    // extension-injected + experimental), so a session carrying
-    // GraftExtensions (graft.Engine.session) is a no-op here — the
-    // query path never mutates session state on such sessions, and
-    // the strategy is present exactly once. Sessions built without
-    // the extension get it through the public per-session hook.
-    if (!spark.sessionState.planner.strategies.contains(TopKPerKeyStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    }
+    Strategies.register(spark, TopKPerKeyStrategy)
     val plan = df.queryExecution.analyzed
     val keys = keyCols.map(c => org.apache.spark.sql.GraftBridge.expression(spark, c))
     val order = orderCols.map { c =>

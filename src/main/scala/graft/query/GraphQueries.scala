@@ -2,6 +2,7 @@ package graft.query
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 
 /** The reference's declared query set as a Scala API over generic
   * node/edge DataFrames (SURVEY §2.3/§2.4/§2.8). Each method is a pure
@@ -31,15 +32,25 @@ object GraphQueries {
 
   /** J3 — the flagship interconnection query (reference
     * notebook/Edits.ipynb:1345-1351): pairs of links that share a
-    * keyword but belong to different categories.
+    * keyword but belong to different categories, ordered by
+    * `(shared_keyword, category1, category2, url1, url2)`.
     *
-    * Shape: self-equi-join of `hasKeyword` on `dst` with the
-    * canonical-pair residual `src1 < src2` (halves the output — the
-    * reference's own hand-optimization), then two joins to the
-    * (broadcast) category assignment. The self-join is the one
-    * physical risk at scale: it shuffles on keyword and hot keywords
-    * skew — mitigations are bucketing on `dst` + AQE skew-join
-    * (SURVEY §4).
+    * Top-k shape (any `limit` below Spark's
+    * `spark.sql.execution.topKSortFallbackThreshold`, i.e. whenever
+    * the final LIMIT itself plans as `TakeOrderedAndProject`): the
+    * `(url, keyword, category)` triples of `hasKeyword ⋈
+    * broadcast(belongsTo)` shuffle once on the keyword and
+    * [[graft.plans.TopKPairs]] enumerates each keyword's pairs in the
+    * final order, stopping after `limit` rows per partition. No pair
+    * intermediate is built: the work is a sort of the edge set, not
+    * the Σ deg² self-join.
+    *
+    * Unbounded shape (`limit = Int.MaxValue`, or a floating-point
+    * keyword): self-equi-join of `hasKeyword` on `dst` with the pair
+    * residual, then two joins to the (broadcast) category assignment.
+    * That join is Θ(output) and is the one physical risk at scale: it
+    * shuffles on keyword and hot keywords skew — mitigations are
+    * bucketing on `dst` + AQE skew-join (SURVEY §4).
     *
     * @param canonicalPairs notebook variant uses `<` (true); the
     *   dockerapp variant (main.py:202) uses `<>` (false).
@@ -49,6 +60,24 @@ object GraphQueries {
       belongsTo: DataFrame,
       canonicalPairs: Boolean = true,
       limit: Int = 100): DataFrame = {
+    val topK = limit >= 0 &&
+      limit < hasKeyword.sparkSession.sessionState.conf.topKSortFallbackThreshold &&
+      !Seq(FloatType, DoubleType).contains(hasKeyword.schema("dst").dataType)
+    val pairs =
+      if (topK) {
+        val triples = hasKeyword.select(col("src").as("url"), col("dst").as("keyword"))
+          .join(broadcast(belongsTo.select(col("src").as("url"), col("dst").as("category"))),
+            Seq("url"))
+        graft.plans.TopKPairs.pairs(triples, canonicalPairs, limit)
+      } else selfJoinPairs(hasKeyword, belongsTo, canonicalPairs)
+    pairs
+      .orderBy(col("shared_keyword"), col("category1"), col("category2"),
+        col("url1"), col("url2"))
+      .limit(limit)
+  }
+
+  private def selfJoinPairs(hasKeyword: DataFrame, belongsTo: DataFrame,
+      canonicalPairs: Boolean): DataFrame = {
     val e1 = hasKeyword.select(col("src").as("url1"), col("dst").as("kw"))
     val e2 = hasKeyword.select(col("src").as("url2"), col("dst").as("kw"))
     val pairPred =
@@ -62,9 +91,6 @@ object GraphQueries {
       .filter(col("category1") =!= col("category2"))
       .select(col("url1"), col("category1"), col("url2"), col("category2"),
         col("kw").as("shared_keyword"))
-      .orderBy(col("shared_keyword"), col("category1"), col("category2"),
-        col("url1"), col("url2"))
-      .limit(limit)
   }
 
   /** Incremental (delta) maintenance of the flagship J3: the pairs

@@ -1,5 +1,12 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{SparkPlan, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, HashJoin}
 import org.apache.spark.sql.functions._
 
 /** Physical-plan shape assertions — the `.explain` audits the charter
@@ -72,6 +79,67 @@ class PlanShapeSpec extends SparkSpec {
       .orderBy($"o_totalprice".desc).limit(10))
     assert(plan.contains("TakeOrderedAndProject"), s"top-k not planned:\n$plan")
     assert(!plan.contains("Exchange rangepartitioning"), s"global sort planned:\n$plan")
+  }
+
+  /** Every node of the final physical plan, through AQE's stages. */
+  private def finalNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => finalNodes(a.executedPlan)
+    case q: QueryStageExec => finalNodes(q.plan)
+    case r: ReusedExchangeExec => finalNodes(r.child)
+    case _ => p +: p.children.flatMap(finalNodes)
+  }
+
+  test("top-k J3: pair enumeration, no keyword join, one keyword shuffle, lazy build") {
+    // no distinct() on the edges: its own exchange is not J3's
+    val hk = Tables.lineitem(spark, sf0001)
+      .select($"l_suppkey".as("src"), $"l_partkey".as("dst"))
+    val bt = Tables.supplier(spark, sf0001)
+      .select($"s_suppkey".as("src"), $"s_nationkey".as("dst"))
+    // building the query runs no Spark job: no eager collect and no
+    // threshold probe. A marker job submitted after it bounds the
+    // (asynchronous) listener events to wait for.
+    val phases = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        phases.add(Option(e.properties).map(_.getProperty("graft.test.phase")).orNull)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val q = try {
+      sc.setLocalProperty("graft.test.phase", "build")
+      val built = graft.query.GraphQueries.interconnections(
+        hk, bt, canonicalPairs = false, limit = 100)
+      sc.setLocalProperty("graft.test.phase", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!phases.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(phases.contains("marker"), "marker job never reached the listener")
+      built
+    } finally {
+      sc.setLocalProperty("graft.test.phase", null)
+      sc.removeSparkListener(listener)
+    }
+    assert(!phases.contains("build"), s"building interconnections ran a Spark job: $phases")
+
+    q.collect()
+    val nodes = finalNodes(q.queryExecution.executedPlan)
+    val plan = q.queryExecution.executedPlan.toString
+    assert(nodes.count(_.isInstanceOf[graft.plans.TopKPairsExec]) == 1,
+      s"pair enumeration missing:\n$plan")
+    assert(nodes.exists(_.isInstanceOf[TakeOrderedAndProjectExec]),
+      s"partitions not merged by TakeOrderedAndProject:\n$plan")
+    // the only join is the broadcast category lookup, keyed on the url
+    val joins = nodes.collect { case j: HashJoin => j }
+    assert(nodes.count(_.isInstanceOf[BaseJoinExec]) == 1 &&
+      joins.forall(_.isInstanceOf[BroadcastHashJoinExec]) &&
+      joins.flatMap(j => j.leftKeys ++ j.rightKeys).flatMap(_.references)
+        .forall(_.name == "url"),
+      s"J3 top-k must not join on the keyword:\n$plan")
+    val shuffles = nodes.collect { case s: ShuffleExchangeExec => s.outputPartitioning }
+    assert(shuffles.size <= 1 && shuffles.forall {
+      case HashPartitioning(Seq(a: Attribute), _) => a.name == "keyword"
+      case _ => false
+    }, s"J3 top-k must shuffle at most once, on the keyword:\n$plan")
   }
 
   test("text analysis is whole-stage-codegen'd via one fused kernel, no UDFs") {

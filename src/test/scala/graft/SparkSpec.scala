@@ -8,17 +8,22 @@ import org.scalatest.funsuite.AnyFunSuite
   * wins and a plain builder would silently produce a session without
   * the engine's SQL functions. */
 object TestSpark {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    // match the engine sessions (Engine/Bench/Verify): AQE may size
-    // cached-plan output partitioning
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions) // engine SQL functions everywhere
-    .getOrCreate()
+  lazy val session: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "4")
+      // match the engine sessions (Engine/Bench/Verify): AQE may size
+      // cached-plan output partitioning
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions) // engine SQL functions everywhere
+      .getOrCreate()
+    // INFO logging writes megabytes per run and buries real warnings
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }
 
 /** Shared session base: one SparkSession per forked test JVM. */

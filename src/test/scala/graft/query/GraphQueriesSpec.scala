@@ -27,6 +27,28 @@ class GraphQueriesSpec extends SparkSpec {
     assert(out.count() == 2) // (l1,l2) and (l2,l1)
   }
 
+  test("interconnections top-k: self pairs, multiplicity, nulls and limit 0") {
+    // l1 is filed under A and B; l2's keyword edge is stored twice
+    val hk = Seq[(String, String)](("l1", "k"), ("l2", "k"), ("l2", "k"),
+      (null, "k"), ("l3", null)).toDF("src", "dst")
+    val bt = Seq[(String, String)](("l1", "A"), ("l1", "B"), ("l2", "B"),
+      ("l3", "A"), ("l2", null)).toDF("src", "dst")
+    val out = GraphQueries.interconnections(hk, bt, canonicalPairs = false)
+      .as[(String, String, String, String, String)].collect().toSeq
+    assert(out == Seq(("l1", "A", "l2", "B", "k"), ("l1", "A", "l2", "B", "k"),
+      ("l2", "B", "l1", "A", "k"), ("l2", "B", "l1", "A", "k")))
+    // both copies of a duplicated url1 pair with l2 before either pairs
+    // with l4: the cut at 2 keeps (l1, l2) twice
+    val dup = Seq(("l1", "k"), ("l1", "k"), ("l2", "k"), ("l4", "k")).toDF("src", "dst")
+    val cut = GraphQueries.interconnections(dup, bt.union(Seq(("l4", "B")).toDF("src", "dst")),
+      limit = 2).as[(String, String, String, String, String)].collect().toSeq
+    assert(cut == Seq(("l1", "A", "l2", "B", "k"), ("l1", "A", "l2", "B", "k")))
+    val none = GraphQueries.interconnections(hk, bt, limit = 0)
+    assert(none.collect().isEmpty)
+    assert(none.schema.fieldNames.toSeq ==
+      Seq("url1", "category1", "url2", "category2", "shared_keyword"))
+  }
+
   test("interconnections is invariant under input row order") {
     val shuffled = hasKeyword.orderBy(rand(7))
     val a = GraphQueries.interconnections(hasKeyword, belongsTo).collect().toSeq
